@@ -22,6 +22,7 @@ from .store import (
     COMPACT_EVERY,
     SubFold,
     compact_additive,
+    publish_frontier,
     read_additive,
     run_concurrent,
     store_parts,
@@ -103,18 +104,22 @@ def _overlap_compact(
     compact_every: int,
 ) -> None:
     """Run a batch's write thunk(s) and the PRIOR tail's compaction as
-    CONCURRENT jobs (guide §2.6). Safe by construction:
+    CONCURRENT jobs (guide §2.6), then commit the batch by publishing
+    it as the store's frontier (store.publish_frontier) — readers see
+    the batch only from that publish on. Safe by construction:
     ``compact_additive`` folds only batch ids strictly BELOW
     ``batch_id`` — fully-committed directories the current batch never
     touches — and stages its segment under ``seg=<gen>``, disjoint
     from every ``batch=<id>`` dir the write thunks produce. The
     manifest publish stays compaction's single commit point, and the
-    foreachBatch writer returns only after BOTH join, so the streaming
-    checkpoint still commits after all output landed. A crash between
-    the manifest publish and the batch write completing replays the
-    batch (offsets uncommitted), which overwrites its dirs and no-ops
-    the already-advanced compaction — the same convergence argument as
-    the sequential order."""
+    foreachBatch writer returns only after BOTH join and the frontier
+    is published, so the streaming checkpoint still commits after all
+    output landed. A crash between the manifest publish and the batch
+    write completing replays the batch (offsets uncommitted), which
+    overwrites its dirs and no-ops the already-advanced compaction —
+    the same convergence argument as the sequential order; a crash
+    before the frontier publish leaves the batch invisible until its
+    replay commits it."""
     thunks = list(write_thunks)
     if compact_every:
         thunks.append(
@@ -122,7 +127,8 @@ def _overlap_compact(
                 spark, path, batch_id, folds, compact_every=compact_every
             )
         )
-    run_concurrent(thunks)
+    run_concurrent(spark, thunks)
+    publish_frontier(path, batch_id)
 
 
 def idempotent_parquet_sink(
@@ -171,10 +177,10 @@ def idempotent_parquet_sink(
 
 def read_sink(spark, path: str) -> DataFrame:
     """Read everything the idempotent sink has committed: compacted
-    segments ∪ live tail (one manifest snapshot, never mutates the
-    store). ``basePath`` anchors the tail read so any ``dt=``
-    partition layer below ``batch=<id>`` resolves; segments carry the
-    same layout at their roots."""
+    segments ∪ the tail up to the frontier (one manifest snapshot,
+    never mutates the store). ``basePath`` anchors the tail read so
+    any ``dt=`` partition layer below ``batch=<id>`` resolves;
+    segments carry the same layout at their roots."""
     parts = store_parts(spark, path, use_base_path=True)
     if not parts:
         return spark.read.option("basePath", path).parquet(

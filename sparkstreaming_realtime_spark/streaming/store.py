@@ -18,12 +18,27 @@ This module bounds it with manifest-committed compaction:
 
     {"gen": 3,                       # compaction generation
      "upto": 57,                     # batch ids <= upto are folded
+     "frontier": 60,                 # highest batch id committed
      "segments": {"": ["seg=3"]},    # committed base, per sub-store
      "gc": ["seg=2", "batch=41"]}    # stale dirs, grace-deferred
 
+- **Every batch publishes.** A sink's writer ends with
+  :func:`publish_frontier`: after the batch's writes and the
+  concurrent compaction have both joined, ``frontier`` moves up to the
+  batch id (never down: a replayed older id leaves it alone). A
+  compaction publishes too and carries the frontier over.
 - **Live view** = committed segments ∪ tail ``batch=<id>`` dirs with
-  ``id > upto`` (:func:`store_parts`). Without a manifest this
-  degrades to exactly the old glob-everything behavior.
+  ``upto < id <= frontier`` (:func:`store_parts`). A dir above the
+  frontier is a batch still being written, or one whose write crashed;
+  readers never see it. The invariant ``upto <= frontier`` holds in
+  every published manifest, so the folded base is always part of the
+  committed prefix. A store with no frontier (no manifest, or one
+  written by a caller that never publishes a frontier, such as the
+  plan-level writers) reads every tail dir above ``upto``: exactly the
+  old glob-everything behaviour.
+- **Versions.** ``(gen, frontier)`` names a committed snapshot: the
+  serving caches key on it and fold exactly that snapshot
+  (:func:`pinned`).
 - **Fold mode** (aggregated stores): compaction folds base ∪ tail
   into ONE new segment with the store's own merge (key-wise integer
   sum, set-distinct, k-smallest). The base never outgrows the key
@@ -65,6 +80,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -120,12 +137,48 @@ class SubFold:
     use_base_path: bool = False
 
 
-def load_manifest(path: str) -> Optional[dict]:
+def read_manifest(path: str) -> dict:
+    """One read of the store's manifest, with the empty store's values
+    filled in where it has none: gen/upto -1, no segments, no gc and
+    no frontier (``None``)."""
     try:
         with open(os.path.join(path, _MANIFEST)) as f:
-            return json.load(f)
+            m = json.load(f)
     except (OSError, ValueError):
-        return None
+        m = {}
+    return {
+        "gen": m.get("gen", -1),
+        "upto": m.get("upto", -1),
+        "frontier": m.get("frontier"),
+        "segments": m.get("segments", {}),
+        "gc": m.get("gc", []),
+    }
+
+
+def load_manifest(path: str) -> Optional[dict]:
+    """The store's last published compaction (its manifest), or None
+    while the store has never been compacted — a manifest that only
+    records the frontier describes no segments yet."""
+    m = read_manifest(path)
+    return m if m["gen"] >= 0 else None
+
+
+#: manifests pinned for the current context, by absolute store path
+_PINNED: ContextVar[dict] = ContextVar("store_pinned", default={})
+
+
+@contextmanager
+def pinned(path: str, manifest: dict):
+    """Within the block, :func:`store_parts` resolves ``path`` to
+    ``manifest`` instead of reading it again: a fold keyed by one
+    manifest read reads exactly that snapshot, even if a batch
+    commits mid-fold. Context-local, so concurrent request threads
+    pin independently."""
+    token = _PINNED.set({**_PINNED.get(), os.path.abspath(path): manifest})
+    try:
+        yield
+    finally:
+        _PINNED.reset(token)
 
 
 def _publish_manifest(path: str, manifest: dict) -> None:
@@ -137,6 +190,23 @@ def _publish_manifest(path: str, manifest: dict) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, os.path.join(path, _MANIFEST))
+
+
+def publish_frontier(path: str, batch_id: int) -> None:
+    """Commit batch ``batch_id``: move the manifest's frontier up to
+    it. Called once the batch's writes (and the compaction running
+    beside them) have joined, so every id at or below the frontier is
+    fully written. A replayed id at or below the frontier publishes
+    nothing — the frontier never moves backwards, and the replay's
+    output is the same by the idempotence contract. A batch that wrote
+    nothing here (the quality gate's quarantined batches leave no
+    ``accepted/batch=<id>``) still commits, so the store dir is made
+    if it is missing."""
+    m = read_manifest(path)
+    if m["frontier"] is not None and m["frontier"] >= batch_id:
+        return
+    os.makedirs(path, exist_ok=True)
+    _publish_manifest(path, {**m, "frontier": batch_id})
 
 
 def batch_ids(path: str) -> list[int]:
@@ -154,30 +224,32 @@ def batch_ids(path: str) -> list[int]:
     return sorted(out)
 
 
-def _tail_dirs(path: str, upto: int, sub: str) -> list[str]:
+def _tail_dirs(path: str, m: dict, sub: str) -> list[str]:
+    upto, frontier = m["upto"], m["frontier"]
     return [
         os.path.join(path, f"batch={i}", sub)
         if sub
         else os.path.join(path, f"batch={i}")
         for i in batch_ids(path)
-        if i > upto
+        if i > upto and (frontier is None or i <= frontier)
     ]
 
 
 def store_parts(
     spark, path: str, sub: str = "", use_base_path: bool = False
 ) -> list[DataFrame]:
-    """The frames that together ARE the store's live view: one per
-    committed segment plus one over the live tail. Resolves a single
-    manifest snapshot and never mutates the store — safe to call
-    while a writer runs (segments a new manifest drops survive one
-    further compaction interval; see the module GC contract).
+    """The frames that together ARE the store's live view: one over
+    the committed segments plus one over the committed tail
+    ``(upto, frontier]``. Resolves a single manifest snapshot (the
+    :func:`pinned` one, if any) and never mutates the store — safe to
+    call while a writer runs (segments a new manifest drops survive
+    one further compaction interval; see the module GC contract).
 
     With ``use_base_path`` the tail read anchors partition discovery
     at the store root so layers below ``batch=<id>`` (``dt=``)
     resolve as partition columns; the ``batch`` column itself is
     dropped — segment frames never had it."""
-    m = load_manifest(path) or {"upto": -1, "segments": {}}
+    m = _PINNED.get().get(os.path.abspath(path)) or read_manifest(path)
     segs = [os.path.join(path, seg) for seg in m["segments"].get(sub, [])]
     # ONE multi-path scan over all segments, not one relation per
     # segment: a per-segment union adds planning cost linear in
@@ -197,7 +269,7 @@ def store_parts(
         if use_base_path and "seg" in sdf.columns:
             sdf = sdf.drop("seg")
         parts.append(sdf)
-    tail = _tail_dirs(path, m["upto"], sub)
+    tail = _tail_dirs(path, m, sub)
     if tail:
         reader = spark.read
         if use_base_path:
@@ -257,8 +329,9 @@ def write_rows_parquet(
     table = pa.table(dict(zip((n for n, _t in schema), arrays)))
     # a crash between a previous attempt's staging and rename orphans
     # its tmp sibling inside the batch dir (each attempt uses a fresh
-    # uuid) — reclaim stale ones before staging (r14 ADVICE)
-    for stale in glob.glob(f"{path}.tmp-*"):
+    # uuid) — reclaim stale ones before staging. The path is escaped:
+    # a ``[`` in it would otherwise read as a glob character class
+    for stale in glob.glob(f"{glob.escape(path)}.tmp-*"):
         shutil.rmtree(stale, ignore_errors=True)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     os.makedirs(tmp, exist_ok=True)
@@ -270,26 +343,26 @@ def write_rows_parquet(
     os.rename(tmp, path)
 
 
-def run_concurrent(thunks: list) -> list:
+def run_concurrent(spark, thunks: list) -> list:
     """Run independent Spark-job-submitting thunks as CONCURRENT jobs
     (guide §2.6 — actions are only sequential because driver code
     calls them sequentially). Each worker is wrapped in
-    ``pyspark.inheritable_thread_target`` so it inherits the calling
-    thread's JVM-thread-local properties (job group / description /
-    scheduler pool) under pinned-thread mode — cancelling the caller's
-    job group therefore cancels jobs submitted from these threads too,
-    and UI labels stay attached. Returns results in submission order;
-    the first raised exception propagates."""
+    ``pyspark.inheritable_thread_target(spark)`` so it inherits the
+    calling thread's JVM-thread-local properties (job group /
+    description / scheduler pool) and the session's job tags under
+    pinned-thread mode — cancelling the caller's job group or tag
+    therefore cancels jobs submitted from these threads too, and UI
+    labels stay attached. Returns results in submission order; the
+    first raised exception propagates."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
-        ]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]
 
 
@@ -329,9 +402,7 @@ def compact_additive(
     Returns True when a compaction ran. Crash-safe around the single
     manifest publish (see module docstring); replay-idempotent (a
     re-run sees ``upto`` already advanced and no-ops)."""
-    m = load_manifest(path) or {
-        "gen": -1, "upto": -1, "segments": {}, "gc": []
-    }
+    m = read_manifest(path)
     ids = [i for i in batch_ids(path) if m["upto"] < i < batch_id]
     if len(ids) < compact_every:
         return False
@@ -413,6 +484,7 @@ def compact_additive(
     new_segments: dict[str, list[str]] = {}
     next_gc: list[str] = []
     results = run_concurrent(
+        spark,
         [
             (lambda sub=sub, spec=spec: _fold_sub(sub, spec))
             for sub, spec in folds.items()
@@ -422,11 +494,17 @@ def compact_additive(
         new_segments[sub] = segs
         next_gc.extend(gc)
     next_gc.extend(f"batch={i}" for i in ids)
+    # everything folded is committed, so a frontier (if the store keeps
+    # one) is carried over and never left below ``upto``
+    frontier = m["frontier"]
+    if frontier is not None:
+        frontier = max(frontier, batch_id - 1)
     _publish_manifest(
         path,
         {
             "gen": gen,
             "upto": batch_id - 1,
+            "frontier": frontier,
             "segments": new_segments,
             "gc": next_gc,
         },

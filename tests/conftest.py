@@ -13,6 +13,16 @@ from sparkstreaming_realtime_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    # a worker thread wrapped without the session drops the caller's
+    # job tags (tag-based cancellation misses its jobs); fail instead
+    config.addinivalue_line(
+        "filterwarnings",
+        r"error:Spark session is not provided\. Tags will not be "
+        r"inherited\.:UserWarning",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)

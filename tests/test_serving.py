@@ -6,6 +6,7 @@ JSON against the registry frames."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.request
 
 import pytest
@@ -363,3 +364,167 @@ def test_retention_and_bm25_reads_cached_and_invalidated(spark, tmp_path):
     assert r1 == r2 and len(serving._BM25_STORE_CACHE) == 1
     assert r1[0]["doc_id"] == 1  # doc 1 matches both terms
     serving._BM25_STORE_CACHE.clear()
+
+
+def _dau_rows(spark, rows, day=TD):
+    import datetime as dt_
+
+    y, m, d = map(int, day.split("-"))
+    return spark.createDataFrame(
+        [(mid, day, dt_.datetime(y, m, d, h)) for mid, h in rows],
+        "mid string, dt string, event_time timestamp",
+    )
+
+
+def test_dau_store_serves_only_committed_batches(spark, tmp_path):
+    """A ``batch=<id>`` dir above the manifest's frontier (an in-flight
+    or crashed write) never reaches the served body; once the sink
+    commits that batch it does."""
+    from sparkstreaming_realtime_spark import serving
+    from sparkstreaming_realtime_spark.streaming.sinks import (
+        idempotent_parquet_sink,
+    )
+
+    store = str(tmp_path / "dau_store")
+    sink = idempotent_parquet_sink(
+        store, key_cols=("mid", "dt"), partition_col="dt"
+    )
+    sink(_dau_rows(spark, [("u1", 10)]), 0)
+    pending = _dau_rows(spark, [("u2", 11), ("u3", 11)])
+    pending.write.partitionBy("dt").parquet(f"{store}/batch=1")
+    serving._DAU_STORE_CACHE.clear()
+    try:
+        got = serving.dau_realtime_cached(spark, store, TD)
+        assert got == {"dauTotal": 1, "dauTd": {"10": 1}, "dauYd": {}}
+        sink(pending, 1)
+        got = serving.dau_realtime_cached(spark, store, TD)
+        assert got["dauTotal"] == 3 and got["dauTd"] == {"10": 1, "11": 2}
+    finally:
+        serving._DAU_STORE_CACHE.clear()
+
+
+def test_dau_store_one_fold_per_version(spark, tmp_path, monkeypatch):
+    """Concurrent /dauRealtime requests for td and td-1 against one
+    store version run exactly one store fold between them, and one
+    newly committed batch exactly one more."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sparkstreaming_realtime_spark import serving
+    from sparkstreaming_realtime_spark.streaming.sinks import (
+        idempotent_parquet_sink,
+    )
+
+    yd = "2024-01-14"
+    store = str(tmp_path / "dau_store")
+    sink = idempotent_parquet_sink(
+        store, key_cols=("mid", "dt"), partition_col="dt"
+    )
+    sink(_dau_rows(spark, [("u1", 9)], yd).union(
+        _dau_rows(spark, [("u1", 10), ("u2", 11)])), 0)
+
+    folds = []
+    real = serving.dau_realtime_from_store
+
+    def counting(spark_, path, td):
+        folds.append(td)
+        return real(spark_, path, td)
+
+    monkeypatch.setattr(serving, "dau_realtime_from_store", counting)
+    serving._DAU_STORE_CACHE.clear()
+    srv, _ = serve(spark, str(tmp_path), port=0, dau_store=store)
+    try:
+        port = srv.server_address[1]
+        days = [TD, yd] * 4
+
+        def read_all():
+            with ThreadPoolExecutor(max_workers=len(days)) as pool:
+                return list(pool.map(
+                    lambda d: _get(
+                        f"http://127.0.0.1:{port}/dauRealtime?td={d}"
+                    )[1],
+                    days,
+                ))
+
+        bodies = read_all()
+        assert len(folds) == 1
+        assert bodies[0] == {
+            "dauTotal": 2, "dauTd": {"10": 1, "11": 1}, "dauYd": {"09": 1},
+        }
+        assert bodies[1] == {"dauTotal": 1, "dauTd": {"09": 1}, "dauYd": {}}
+        assert all(b == bodies[i % 2] for i, b in enumerate(bodies))
+        sink(_dau_rows(spark, [("u3", 12)]), 1)
+        bodies = read_all()
+        assert len(folds) == 2
+        assert bodies[0]["dauTotal"] == 3
+        assert bodies[1] == {"dauTotal": 1, "dauTd": {"09": 1}, "dauYd": {}}
+    finally:
+        srv.shutdown()
+        serving._DAU_STORE_CACHE.clear()
+
+
+def test_malformed_td_is_a_400_on_both_dau_paths(endpoint, spark, tmp_path):
+    """A ``td`` that is no ISO date is the client's error on the
+    fact-scan and the store-backed path alike — a 400, not a dropped
+    connection."""
+    import urllib.error
+
+    from sparkstreaming_realtime_spark.streaming.sinks import (
+        idempotent_parquet_sink,
+    )
+
+    store = str(tmp_path / "dau_store")
+    idempotent_parquet_sink(
+        store, key_cols=("mid", "dt"), partition_col="dt"
+    )(_dau_rows(spark, [("u1", 10)]), 0)
+    srv, _ = serve(spark, str(tmp_path), port=0, dau_store=store)
+    try:
+        store_ep = f"http://127.0.0.1:{srv.server_address[1]}"
+        for base in (endpoint, store_ep):
+            for td in ("2024-13-45", "yesterday"):
+                with pytest.raises(urllib.error.HTTPError) as e:
+                    _get(f"{base}/dauRealtime?td={td}")
+                assert e.value.code == 400
+    finally:
+        srv.shutdown()
+
+
+def test_version_cache_misses_share_one_fold(tmp_path):
+    """Stress: many threads (more than cores, fast thread switching)
+    missing on one store version run its fold exactly once and all get
+    its body."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sparkstreaming_realtime_spark import serving
+    from sparkstreaming_realtime_spark.streaming.store import (
+        publish_frontier,
+    )
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    publish_frontier(store, 0)
+    cache = serving._VersionCache()
+    calls = []
+    lock = threading.Lock()
+
+    def fold():
+        with lock:
+            calls.append(1)
+        time.sleep(0.05)
+        return {"n": len(calls)}
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=32) as pool:
+            futures = [
+                pool.submit(serving._cached_versioned, cache, store, (), fold)
+                for _ in range(64)
+            ]
+            bodies = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert len(calls) == 1
+    assert all(b == {"n": 1} for b in bodies)

@@ -34,6 +34,7 @@ from sparkstreaming_realtime_spark.streaming.sinks import (
 from sparkstreaming_realtime_spark.streaming.store import (
     batch_ids,
     load_manifest,
+    read_manifest,
 )
 
 
@@ -413,3 +414,80 @@ def test_overlap_compact_joins_all_jobs_and_propagates_errors(
             [lambda: (_ for _ in ()).throw(RuntimeError("boom"))],
             spark, path, 9, {"": SubFold()}, 2,
         )
+
+
+def _raw_batch(spark, b):
+    return spark.createDataFrame(
+        [(f"r{b}_{i}", "2024-01-01") for i in range(3)], "k string, dt string"
+    )
+
+
+def test_batch_above_frontier_is_invisible_until_committed(spark, tmp_path):
+    """The manifest's frontier is the commit point of a batch: a
+    ``batch=<id>`` dir above it — what an in-flight or crashed write
+    leaves — is not part of the live view until the sink commits that
+    id."""
+    path = str(tmp_path / "raw")
+    sink = idempotent_parquet_sink(path, key_cols=("k",), partition_col="dt")
+    sink(_raw_batch(spark, 0), 0)
+    assert read_manifest(path)["frontier"] == 0
+    # the write of batch 1 has landed, its commit has not
+    _raw_batch(spark, 1).write.partitionBy("dt").parquet(f"{path}/batch=1")
+    assert read_sink(spark, path).count() == 3
+    sink(_raw_batch(spark, 1), 1)
+    assert read_manifest(path)["frontier"] == 1
+    assert read_sink(spark, path).count() == 6
+
+
+def test_frontierless_store_reads_every_tail_dir(spark, tmp_path):
+    """A store whose writer never publishes a frontier (the plan-level
+    writers lay ``batch=<id>`` dirs out themselves) keeps the
+    read-every-tail-dir view."""
+    path = str(tmp_path / "raw")
+    for b in range(3):
+        _raw_batch(spark, b).write.partitionBy("dt").parquet(
+            f"{path}/batch={b}"
+        )
+    assert read_manifest(path)["frontier"] is None
+    assert load_manifest(path) is None
+    assert read_sink(spark, path).count() == 9
+
+
+def test_replayed_older_batch_never_moves_frontier_back(spark, tmp_path):
+    """A replay of an older batch id rewrites its dir but leaves the
+    frontier (and with it the store version) where it was; across a
+    compaction the frontier is carried over and stays >= upto."""
+    path = str(tmp_path / "raw")
+    sink = idempotent_parquet_sink(
+        path, key_cols=("k",), partition_col="dt", compact_every=2
+    )
+    for b in range(4):
+        sink(_raw_batch(spark, b), b)
+    m = read_manifest(path)
+    assert m["frontier"] == 3 and m["upto"] <= m["frontier"]
+    sink(_raw_batch(spark, 1), 1)  # replay of a committed, older id
+    assert read_manifest(path)["frontier"] == 3
+    assert read_sink(spark, path).count() == 12
+    sink(_raw_batch(spark, 4), 4)  # compacts [2, 3], commits 4
+    m = read_manifest(path)
+    assert m["frontier"] == 4 and m["upto"] == 3
+
+
+def test_stale_staging_sweep_escapes_glob_characters(tmp_path):
+    """``write_rows_parquet`` reclaims orphaned ``.tmp-*`` staging
+    siblings even when the store path holds glob characters (``[``
+    would otherwise open a character class and match nothing)."""
+    import pyarrow.parquet as pq
+
+    from sparkstreaming_realtime_spark.streaming.store import (
+        write_rows_parquet,
+    )
+
+    root = tmp_path / "store[1]"
+    path = str(root / "batch=0")
+    os.makedirs(root)
+    stale = f"{path}.tmp-deadbeef"
+    os.makedirs(stale)
+    write_rows_parquet(path, [("n", "bigint")], [(7,)])
+    assert not os.path.exists(stale)
+    assert pq.read_table(path).column("n").to_pylist() == [7]
